@@ -9,11 +9,13 @@ import graft.sources.{GzipLines, Registry, SyntheticRegistry}
   * sink in the reference's format (Main.scala:88-95).
   *
   * Usage: runMain graft.NpmDemo [packages.txt.gz] [limit]
+  * The default input is the test fixture in the reference's format
+  * (one npm name per line, gzip), resolved from the repository root.
   */
 object NpmDemo {
   def main(args: Array[String]): Unit = {
     val path = args.headOption
-      .getOrElse("/root/reference/src/main/resources/packages.txt.gz")
+      .getOrElse("src/test/resources/packages.txt.gz")
     val limit = args.lift(1).map(_.toInt).getOrElse(25)
     val spark = GraftSession.local(4)
 

@@ -9,16 +9,27 @@ import java.nio.file.{Files, Paths}
   * Mostly planning-only, with two caveats: queries that call
   * Lineage.truncate during CONSTRUCTION would eagerly execute their
   * upstream pipeline and dump a collapsed `Scan ExistingRDD` stub, so
-  * truncation is disabled for the dump session (Lineage.NoTruncateKey —
-  * round-10 advice; iterative queries then show their full per-round
-  * lineage), and index-probing queries still run their self-healing
-  * index build on first touch of a data dir.
+  * truncation is disabled while each query is built and explained
+  * (Lineage.NoTruncateKey, restored after each query so it never stays
+  * on as a session-wide conf; iterative queries then show their full
+  * per-round lineage), and index-probing queries still run their
+  * self-healing index build on first touch of a data dir.
   *
   * Usage: runMain graft.PlanFormatted <outDir> <tag> [q1,q2,...] [sfDir]
   *   tag   = e.g. "before" / "after" — appended to the file name
   *   query list empty/"all" = every registry query
   */
 object PlanFormatted {
+
+  /** Runs `body` with Lineage.NoTruncateKey set, then restores the
+    * session's previous value (or its absence). */
+  private[graft] def withoutTruncation[T](spark: SparkSession)(body: => T): T = {
+    val prev = spark.conf.getOption(Lineage.NoTruncateKey)
+    spark.conf.set(Lineage.NoTruncateKey, "true")
+    try body
+    finally prev.fold(spark.conf.unset(Lineage.NoTruncateKey))(spark.conf.set(Lineage.NoTruncateKey, _))
+  }
+
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val tag = args(1)
@@ -31,13 +42,12 @@ object PlanFormatted {
     val spark = GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]"), cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set(Lineage.NoTruncateKey, "true")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val txt =
-        try SparkEntry.queries(name)(spark, sfDir)
+        try withoutTruncation(spark)(SparkEntry.queries(name)(spark, sfDir)
           .queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
+            org.apache.spark.sql.execution.FormattedMode))
         catch { case scala.util.control.NonFatal(e) =>
           s"PLANNING FAILED: ${e.getClass.getName}: ${e.getMessage}\n" }
       Files.writeString(Paths.get(outDir, s"${name}_$tag.txt"),

@@ -250,4 +250,18 @@ class PlanSpec extends AnyFunSuite {
           df.queryExecution.executedPlan.toString)
     }
   }
+
+  test("plan dumps disable lineage truncation for one query only, even when it throws") {
+    assert(spark.conf.getOption(Lineage.NoTruncateKey).isEmpty)
+    intercept[IllegalStateException](PlanFormatted.withoutTruncation(spark) {
+      assert(spark.conf.get(Lineage.NoTruncateKey) == "true")
+      throw new IllegalStateException("planning failed")
+    })
+    assert(spark.conf.getOption(Lineage.NoTruncateKey).isEmpty)
+    spark.conf.set(Lineage.NoTruncateKey, "false")
+    try {
+      assert(PlanFormatted.withoutTruncation(spark)(spark.conf.get(Lineage.NoTruncateKey)) == "true")
+      assert(spark.conf.get(Lineage.NoTruncateKey) == "false")
+    } finally spark.conf.unset(Lineage.NoTruncateKey)
+  }
 }

@@ -92,7 +92,7 @@ class ThrottledLinesSourceSpec extends AnyFunSuite {
   }
 
   test("reads the reference's packages.txt.gz through the custom source") {
-    val p = "/root/reference/src/main/resources/packages.txt.gz"
+    val p = getClass.getResource("/packages.txt.gz").getPath
     val (name, _) = runAvailableNow(p, perTrigger = 2)
     val streamed = spark.table(name).as[(Long, String)].collect().map(_._2).toSeq
     val batch = graft.sources.GzipLines.read(spark, p).as[String].collect().toSeq
