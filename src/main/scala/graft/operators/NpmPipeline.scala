@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * explode versions → dual-branch runtime/dev counts (Broadcast+Zip,
   * Balance+Merge) → fold into pkg→version→(deps, devDeps) → print.
   *
-  * Spark-first dataflow: names → enrichment (broadcast snapshot join or
-  * per-partition client) → `explode(versions)` → ONE projection computing
+  * Spark-first dataflow: names → enrichment (snapshot join or per-partition
+  * client) → `explode(versions)` → ONE projection computing
   * both counts (`map_size` of each dependency map — Catalyst evaluates
   * both in the same codegen'd stage, which strictly dominates the
   * reference's duplicated branches) → grouped accumulation as a real
@@ -19,18 +19,30 @@ import org.apache.spark.sql.functions._
   */
 object NpmPipeline {
 
+  /** One row per (package, version, v) of each well-formed document.
+    * Malformed or unparseable registry bodies, and documents without a
+    * name or a versions map, yield no rows, matching the reference's
+    * catch-and-continue (NpmPackage.scala:17-19).
+    *
+    * The validity check sits inside the generator rather than in a
+    * `filter`: a filter on `meta` is a predicate over `from_json`, which
+    * Catalyst pushes through a join onto the registry side and splits
+    * into one schema-pruned parse per referenced field, so every body on
+    * that side would be parsed three times per query. A generator over a
+    * non-attribute input infers no filter, so each joined body is parsed
+    * once, after the join.
+    */
+  private def validVersions(parsed: DataFrame): DataFrame =
+    parsed.select(col("meta.name").as("package"),
+      explode(when(col("meta.name").isNotNull, col("meta.versions"))).as(Seq("version", "v")))
+
   /** Per-(package, version) dependency counts from parsed metadata
     * (Registry.parseMetadata output with a `meta` column).
     * Matches DependencyCount(packageName, version, dependencies,
     * devDependencies) — reference DependencyCount.scala.
     */
   def dependencyCounts(parsed: DataFrame): DataFrame =
-    parsed
-      // malformed / unparseable registry bodies are skipped, matching the
-      // reference's catch-and-continue (NpmPackage.scala:17-19)
-      .filter(col("meta").isNotNull && col("meta.name").isNotNull &&
-        col("meta.versions").isNotNull)
-      .select(col("meta.name").as("package"), explode(col("meta.versions")).as(Seq("version", "v")))
+    validVersions(parsed)
       .select(
         col("package"),
         col("version"),
@@ -43,10 +55,7 @@ object NpmPipeline {
     * registry query; scales as explode → distinct → count.
     */
   def reverseDependencyCounts(parsed: DataFrame): DataFrame =
-    parsed
-      .filter(col("meta").isNotNull && col("meta.name").isNotNull &&
-        col("meta.versions").isNotNull)
-      .select(col("meta.name").as("package"), explode(col("meta.versions")).as(Seq("version", "v")))
+    validVersions(parsed)
       .filter(col("v.dependencies").isNotNull)
       .select(col("package"), explode(map_keys(col("v.dependencies"))).as("dep"))
       .distinct()

@@ -132,9 +132,11 @@ object Registry {
       from_json(col(bodyCol), org.apache.spark.sql.types.DataType.fromDDL(metadataSchema)))
 
   /** The bulk path: join package names against a mirrored registry
-    * snapshot table (`name`, `body`). The snapshot side is broadcast when
-    * it fits, otherwise it's a plain shuffled equi-join — either way no
-    * per-row network I/O, which is the only sane shape at 100 TB.
+    * snapshot table (`name`, `body`). The smaller side is the build side:
+    * normally the names, so a stream's micro-batch is broadcast and the
+    * snapshot is probed in place. Bodies are parsed once, after the
+    * join, so only matched bodies are parsed. Either way no per-row
+    * network I/O, which is the only sane shape at 100 TB.
     */
   def enrichFromSnapshot(names: DataFrame, snapshot: DataFrame,
                          nameCol: String = "line"): DataFrame =

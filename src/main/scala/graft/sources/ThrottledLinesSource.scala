@@ -2,6 +2,7 @@ package graft.sources
 
 import java.io.{BufferedReader, FileInputStream, InputStreamReader}
 import java.nio.charset.StandardCharsets
+import java.util.OptionalLong
 import java.util.zip.GZIPInputStream
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -67,12 +68,26 @@ object ThrottledLinesSource {
     new BufferedReader(new InputStreamReader(stream, StandardCharsets.UTF_8))
   }
 
-  private[sources] def countLines(path: String): Long = {
+  /** Counts the file's lines and sizes them in one pass. */
+  private[sources] def measure(path: String): LinesShape = {
     val r = open(path)
-    try Iterator.continually(r.readLine()).takeWhile(_ != null).size.toLong
-    finally r.close()
+    try {
+      var lines, bytes, longest = 0L
+      var line = r.readLine()
+      while (line != null) {
+        val n = line.getBytes(StandardCharsets.UTF_8).length
+        lines += 1
+        bytes += n
+        if (n > longest) longest = n
+        line = r.readLine()
+      }
+      LinesShape(lines, bytes, longest)
+    } finally r.close()
   }
 }
+
+/** Line count, total UTF-8 bytes and longest line's UTF-8 bytes of a file. */
+private[sources] final case class LinesShape(lines: Long, bytes: Long, longestLine: Long)
 
 private[sources] class ThrottledLinesTable(path: String, perTrigger: Long)
     extends Table with SupportsRead {
@@ -82,12 +97,42 @@ private[sources] class ThrottledLinesTable(path: String, perTrigger: Long)
     java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = ThrottledLinesSource.schema
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new ThrottledLinesStream(path, perTrigger)
-      }
+      override def build(): Scan = new ThrottledLinesScan(path, perTrigger)
     }
+}
+
+/** Reports the size of one micro-batch, so that the planner sees a
+  * throttled batch as small: joined with a large table, the batch is
+  * then the broadcast side. Without statistics Spark sizes a source at
+  * `spark.sql.defaultSizeInBytes`, i.e. unbounded.
+  */
+private[graft] class ThrottledLinesScan(path: String, perTrigger: Long)
+    extends Scan with SupportsReportStatistics {
+
+  // Measured once on the driver at stream start; the stream's end offset
+  // and the statistics share this one pass over the file.
+  private[graft] lazy val shape: LinesShape = {
+    passes += 1
+    ThrottledLinesSource.measure(path)
+  }
+  @volatile private[graft] var passes = 0
+
+  override def readSchema(): StructType = ThrottledLinesSource.schema
+
+  /** `numRows` is the rows of one full batch. `sizeInBytes` bounds any
+    * batch of that many lines: their text is at most the whole file and
+    * at most `numRows` longest lines, plus 8 bytes of `line_no` a row. */
+  override def estimateStatistics(): Statistics = {
+    val rows = math.min(perTrigger, shape.lines)
+    val text = math.min(shape.bytes, rows * shape.longestLine)
+    new Statistics {
+      override def sizeInBytes(): OptionalLong = OptionalLong.of(text + 8 * rows)
+      override def numRows(): OptionalLong = OptionalLong.of(rows)
+    }
+  }
+
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+    new ThrottledLinesStream(path, perTrigger, () => shape.lines)
 }
 
 /** Offset = number of lines fully committed (replay-stable). */
@@ -95,13 +140,14 @@ private[sources] case class LineOffset(line: Long) extends Offset {
   override def json(): String = line.toString
 }
 
-private[sources] class ThrottledLinesStream(path: String, perTrigger: Long)
+private[sources] class ThrottledLinesStream(path: String, perTrigger: Long, lines: () => Long)
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
 
-  // Counted once on the driver at stream start; AvailableNow pins this as
-  // the end-of-stream watermark so the run terminates deterministically.
-  private lazy val total: Long = ThrottledLinesSource.countLines(path)
+  // Counted once on the driver at stream start (the scan's one pass);
+  // AvailableNow pins this as the end-of-stream watermark so the run
+  // terminates deterministically.
+  private def total: Long = lines()
   @volatile private var availableNowEnd: Option[Long] = None
 
   override def initialOffset(): Offset = LineOffset(0L)

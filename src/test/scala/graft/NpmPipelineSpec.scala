@@ -2,6 +2,13 @@ package graft
 
 import graft.operators.NpmPipeline
 import graft.sources.{HttpRegistry, LocalRegistry, Registry, SyntheticRegistry}
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,7 +30,7 @@ class FakeHttpRegistry(bodies: Map[String, String])
   * dependencies, devDependencies) counts as the reference pipeline
   * (Main.scala flowDependencies + AccumulatedDependencyCount).
   */
-class NpmPipelineSpec extends AnyFunSuite {
+class NpmPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import SharedSpark.spark
   import spark.implicits._
 
@@ -189,5 +196,68 @@ class NpmPipelineSpec extends AnyFunSuite {
       Registry.enrichWithClient(Seq("left-pad", "tiny").toDF("line"), registry))
     assert(streamed.count() === 3L)
     assert(streamed.exceptAll(batch).count() === 0L)
+  }
+
+  /** Nodes of an executed plan (AQE stages included) that parse JSON. */
+  private def jsonParses(plan: SparkPlan): Seq[SparkPlan] =
+    collect(plan) { case n if n.expressions.exists(_.exists(_.isInstanceOf[JsonToStructs])) => n }
+
+  /** One parse per joined row: one `from_json` in the plan, above the join. */
+  private def assertParsedOnceAboveJoin(plan: SparkPlan): Unit = {
+    assert(jsonParses(plan).size === 1, plan.treeString)
+    val joins = collect(plan) { case j: BaseJoinExec => j }
+    assert(joins.nonEmpty, plan.treeString)
+    joins.foreach(j => assert(jsonParses(j).isEmpty, plan.treeString))
+  }
+
+  /** A snapshot read back from parquet, like a mirrored registry table:
+    * a local Seq would be a LocalRelation, whose filters and parses the
+    * optimizer evaluates while planning, so the plan would show none. */
+  private def parquetSnapshot(rows: Seq[(String, String)]) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_npm_snapshot_").resolve("t").toString
+    rows.toDF("name", "body").write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("plan shape: snapshot bodies are parsed once, above the join") {
+    val snapshot = parquetSnapshot(Seq(
+      ("left-pad", registryBody("left-pad")),
+      ("tiny", registryBody("tiny")),
+      ("unrequested", """{"name":"unrequested","versions":{}}""")))
+    val names = Seq("left-pad", "tiny", "missing").toDF("line")
+    val counts = NpmPipeline.dependencyCounts(Registry.enrichFromSnapshot(names, snapshot))
+    assert(counts.collect().length === 3)
+    assertParsedOnceAboveJoin(counts.queryExecution.executedPlan)
+  }
+
+  test("plan shape: the throttled micro-batch is the broadcast side of the snapshot join") {
+    import org.apache.spark.sql.streaming.Trigger
+    val p = getClass.getResource("/packages.txt.gz").getPath
+    val registryNames = graft.sources.GzipLines.read(spark, p).as[String].collect().toSeq ++
+      (0 until 200).map(i => s"filler-$i")
+    val synthetic = new SyntheticRegistry
+    val snapshot = parquetSnapshot(registryNames.flatMap(n => synthetic.fetch(n).map(n -> _)))
+    val stream = spark.readStream
+      .format(classOf[graft.sources.ThrottledLinesSource].getName)
+      .option("path", p)
+      .option("linesPerTrigger", "10")
+      .load()
+    val counts = NpmPipeline.dependencyCounts(Registry.enrichFromSnapshot(stream, snapshot))
+    val q = counts.writeStream.format("memory").queryName("npm_plan_shape_t")
+      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    assert(q.recentProgress.count(_.numInputRows > 0) === 3)
+    val streamed = spark.table("npm_plan_shape_t")
+    val batch = NpmPipeline.dependencyCounts(
+      Registry.enrichFromSnapshot(graft.sources.GzipLines.read(spark, p), snapshot))
+    assert(streamed.count() > 0)
+    assert(streamed.exceptAll(batch).count() === 0L)
+    assert(batch.exceptAll(streamed).count() === 0L)
+
+    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+    assertParsedOnceAboveJoin(plan)
+    val broadcasts = collect(plan) { case b: BroadcastExchangeExec => b }
+    assert(broadcasts.size === 1, plan.treeString)
+    assert(collect(broadcasts.head) { case m: MicroBatchScanExec => m }.size === 1, plan.treeString)
   }
 }

@@ -1,11 +1,15 @@
 package graft
 
-import graft.sources.ThrottledLinesSource
+import graft.sources.{ThrottledLinesScan, ThrottledLinesSource}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-class ThrottledLinesSourceSpec extends AnyFunSuite {
+class ThrottledLinesSourceSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SharedSpark.spark
   import spark.implicits._
 
@@ -97,5 +101,38 @@ class ThrottledLinesSourceSpec extends AnyFunSuite {
     val streamed = spark.table(name).as[(Long, String)].collect().map(_._2).toSeq
     val batch = graft.sources.GzipLines.read(spark, p).as[String].collect().toSeq
     assert(streamed.filter(_.nonEmpty) == batch)
+  }
+
+  test("statistics: one batch's rows and a bound on its bytes, from the one pass at stream start") {
+    val p = getClass.getResource("/packages.txt.gz").getPath
+    for (perTrigger <- Seq(1, 2, 7, 30, 100)) {
+      // the bytes Spark holds of each emitted batch: UTF-8 text + 8 per line_no
+      val batchBytes = scala.collection.mutable.ArrayBuffer.empty[Long]
+      val record: (DataFrame, Long) => Unit = (df, _) =>
+        batchBytes += df.as[(Long, String)].collect()
+          .map(_._2.getBytes(java.nio.charset.StandardCharsets.UTF_8).length + 8L).sum
+      val q = spark.readStream
+        .format(classOf[ThrottledLinesSource].getName)
+        .option("path", p)
+        .option("linesPerTrigger", perTrigger.toString)
+        .load()
+        .writeStream.foreachBatch(record)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      val scan = collectFirst(plan) { case m: MicroBatchScanExec => m.scan }.get
+        .asInstanceOf[ThrottledLinesScan]
+      val stats = scan.estimateStatistics()
+      assert(batchBytes.size == (30 + perTrigger - 1) / perTrigger, s"perTrigger $perTrigger")
+      assert(stats.numRows().getAsLong == math.min(perTrigger, 30), s"perTrigger $perTrigger")
+      assert(stats.sizeInBytes().getAsLong >= batchBytes.max, s"perTrigger $perTrigger: $batchBytes")
+      // a batch of the whole file is sized exactly
+      if (perTrigger >= 30) assert(stats.sizeInBytes().getAsLong == batchBytes.max)
+      // counting and sizing decompress the file once, although every
+      // trigger asked for the end offset and every batch for statistics
+      assert(scan.passes == 1, s"perTrigger $perTrigger")
+    }
   }
 }
